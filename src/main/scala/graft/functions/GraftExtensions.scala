@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -12,62 +14,36 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * For an already-running session use [[GraftExtensions.install]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.vectorDotDescriptor)
-    ext.injectFunction(GraftExtensions.topKDescriptor)
-    ext.injectFunction(GraftExtensions.portableHashDescriptor)
-    ext.injectFunction(GraftExtensions.shingleHashesDescriptor)
-    ext.injectFunction(GraftExtensions.winnowDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
-  private val vectorDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vector_dot"),
-    new ExpressionInfo(classOf[VectorDotExpr].getName, "vector_dot"),
+  private type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** A SQL function `name` of exactly `arity` arguments built by `build`. */
+  private def fn[E <: Expression](name: String, arity: Int, build: Seq[Expression] => E)
+                                 (implicit cls: ClassTag[E]): Descriptor = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.runtimeClass.getName, name),
     (children: Seq[Expression]) => {
-      require(children.length == 2, "vector_dot takes exactly 2 arguments")
-      VectorDotExpr(children.head, children(1))
+      require(children.length == arity,
+        s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+      build(children)
     })
 
-  private val topKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("top_k_by_score"),
-    new ExpressionInfo(classOf[TopKByScore].getName, "top_k_by_score"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3, "top_k_by_score takes exactly 3 arguments")
-      TopKByScore(children(0), children(1), children(2))
-    })
-
-  private val portableHashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("portable_hash"),
-    new ExpressionInfo(classOf[PortableHashExpr].getName, "portable_hash"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "portable_hash takes exactly 1 argument")
-      PortableHashExpr(children.head)
-    })
-
-  private val shingleHashesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[ShingleHashExpr].getName, "shingle_hashes"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "shingle_hashes takes exactly 1 argument")
-      ShingleHashExpr(children.head)
-    })
-
-  private val winnowDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("winnow_fingerprints"),
-    new ExpressionInfo(classOf[WinnowExpr].getName, "winnow_fingerprints"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "winnow_fingerprints takes exactly 1 argument")
-      WinnowExpr(children.head)
-    })
+  /** The one registration table: drives both [[GraftExtensions.apply]] and
+    * [[install]]. */
+  private val functions: Seq[Descriptor] = Seq(
+    fn("vector_dot", 2, c => VectorReduceExpr(c(0), c(1), VectorOp.Dot)),
+    fn("top_k_by_score", 3, c => TopKByScore(c(0), c(1), c(2))),
+    fn("portable_hash", 1, c => PortableHashExpr(c.head)),
+    fn("shingle_hashes", 1, c => ShingleHashExpr(c.head)),
+    fn("winnow_fingerprints", 1, c => WinnowExpr(c.head)))
 
   /** Imperative registration on an existing session. */
-  def install(spark: SparkSession): Unit = {
-    Seq(vectorDotDescriptor, topKDescriptor, portableHashDescriptor,
-        shingleHashesDescriptor, winnowDescriptor)
-      .foreach { case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-      }
-  }
+  def install(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native hashed-feature bucket counter (r19): the DSIR per-document
   * feature vector — for every word n-gram of `split(text, ' ')`, bucket
-  * `portable_ngram_hash % buckets` and count occurrences — in ONE pass
-  * over the UTF-8 bytes, emitted as `array<struct<b, c>>` of the
+  * `portable_ngram_hash % buckets` and count occurrences — in ONE
+  * row-local projection, emitted as `array<struct<b, c>>` of the
   * nonempty buckets in ascending bucket order.
   *
   * Why: the composed form (`explode(portable_ngram_hashes) → pmod →
@@ -25,7 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.queries.SelectionOps.dsirScores]].
   *
   * Bit-identical to the composed form: the n-gram hash is EXACTLY
-  * [[PortableNgramHashExpr]]'s; the hash is nonnegative (< 2³¹) so
+  * [[PortableNgramHashExpr]]'s — both take it from
+  * [[PortableText.ngramHashes]], whose plain long[] this kernel counts
+  * without boxing it; the hash is nonnegative (< 2³¹) so
   * `% buckets` equals `pmod`; counts are exact; a document with fewer
   * than n words returns an EMPTY array (the composed explode emitted no
   * rows). Emission order (ascending bucket) is not observable — every
@@ -60,18 +62,16 @@ final case class NgramBucketCountsExpr(child: Expression, n: Int, buckets: Int)
 object NgramBucketCountsExpr {
 
   /** The shared kernel (also called from generated code): bucket every
-    * n-gram hash of [[PortableNgramHashExpr.ngrams]] and count. The
-    * n-gram pass is delegated to the sibling kernel so the hash
-    * semantics cannot drift. */
+    * n-gram hash and count. */
   def counts(s: UTF8String, n: Int, buckets: Int): ArrayData = {
-    val hashes = PortableNgramHashExpr.ngrams(s, n)
-    val m = hashes.numElements()
+    val hashes = new PortableText(s).ngramHashes(n)
+    val m = hashes.length
     if (m == 0) return new GenericArrayData(Array.empty[Any])
     val cnt = new Array[Long](buckets)
     var i = 0
     while (i < m) {
       // portable hashes are in [0, 2^31), so % == pmod
-      cnt((hashes.getLong(i) % buckets).toInt) += 1L
+      cnt((hashes(i) % buckets).toInt) += 1L
       i += 1
     }
     var nonEmpty = 0

@@ -9,10 +9,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the cross-engine token hash
-  * ([[graft.queries.Parity.strHash]]):
-  *
-  *   h(s) = ( Σ_{i=1..len} code(s_i) · ((1103515245·i + 12345) mod M) ) mod M,
-  *   M = 2³¹−1
+  * ([[graft.queries.Parity.strHash]]) of the whole string, in the format
+  * [[PortableText]] defines.
   *
   * Why native: the Column formulation (`aggregate(sequence(1, length(s)),
   * …, ascii(substr(s, i, 1)))`) allocates an index array per row and makes
@@ -23,9 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics are bit-identical to the Column form: `code` is the
   * char-at-i value (what `ascii(substr(s,i,1))` returns for BMP strings
-  * and what DuckDB's `ord(s[i])` computes for ASCII). Pure-ASCII input —
-  * the corpus contract documented in Parity — takes a byte-wise fast path
-  * with no allocation; anything else falls back to Java chars. */
+  * and what DuckDB's `ord(s[i])` computes for ASCII). */
 final case class PortableHashExpr(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -48,32 +44,10 @@ final case class PortableHashExpr(child: Expression) extends UnaryExpression {
 }
 
 object PortableHashExpr {
-  private final val M = 2147483647L
-
   /** The shared kernel (also called from generated code). */
   def hash(s: UTF8String): Long = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    var acc = 0L
-    if (ascii) {
-      var j = 0
-      while (j < nb) {
-        val w = (1103515245L * (j + 1) + 12345L) % M
-        acc = (acc + (s.getByte(j) & 0xffL) * w) % M
-        j += 1
-      }
-    } else {
-      val str = s.toString
-      var j = 0
-      while (j < str.length) {
-        val w = (1103515245L * (j + 1) + 12345L) % M
-        acc = (acc + str.charAt(j).toLong * w) % M
-        j += 1
-      }
-    }
-    acc
+    val t = new PortableText(s)
+    t.hash(0, t.length)
   }
 }
 

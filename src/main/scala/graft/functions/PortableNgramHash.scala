@@ -21,14 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the signature) and the DSIR feature buckets (q143/q150 — the bucket id
   * is strHash(bigram) mod B). Bit-identical by construction to
   * `strHash(concat_ws(" ", w_k, …, w_{k+n-1}))` over
-  * `split(text, " ")`: word segmentation splits on every 0x20 byte
-  * (empty segments count, exactly like the Column form and DuckDB's
-  * string_split), and each n-gram hashes with positions 1..len of the
-  * joined string, the separator spaces hashing as code 32 at their joined
-  * positions. Fewer than n words → empty array (the callers' old
-  * size-guard filters become no-ops). Pure-ASCII input takes the
-  * zero-allocation byte path; any non-ASCII document falls back to the
-  * equivalent char-indexed loop ([[PortableHashExpr]]'s convention).
+  * `split(text, " ")`: [[PortableText]] owns the word segmentation (empty
+  * segments count) and why each joined n-gram is a span of the text.
+  * Fewer than n words → empty array (the callers' old size-guard filters
+  * become no-ops).
   */
 final case class PortableNgramHashExpr(child: Expression, n: Int)
   extends UnaryExpression {
@@ -55,102 +51,9 @@ final case class PortableNgramHashExpr(child: Expression, n: Int)
 }
 
 object PortableNgramHashExpr {
-  private final val M = 2147483647L
-
   /** The shared kernel (also called from generated code). */
-  def ngrams(s: UTF8String, n: Int): ArrayData = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    if (ascii) new GenericArrayData(ngramsAscii(s, n))
-    else new GenericArrayData(ngramsChars(s.toString, n))
-  }
-
-  private def ngramsAscii(s: UTF8String, n: Int): Array[Long] = {
-    val nb = s.numBytes
-    // word boundaries: starts(w) .. ends(w) (exclusive) in byte offsets
-    var words = 1
-    var i = 0
-    while (i < nb) { if (s.getByte(i) == 0x20) words += 1; i += 1 }
-    if (words < n) return Array.emptyLongArray
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < nb) {
-      if (s.getByte(i) == 0x20) { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = nb
-    val out = new Array[Long](words - n + 1)
-    var k = 0
-    while (k < out.length) {
-      var acc = 0L
-      var pos = 1L // 1-based char position within the joined n-gram string
-      var j = k
-      while (j < k + n) {
-        var b = starts(j)
-        val e = ends(j)
-        while (b < e) {
-          acc = (acc + (s.getByte(b) & 0xffL) *
-            ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1; b += 1
-        }
-        if (j < k + n - 1) { // the joining space, code 32
-          acc = (acc + 32L * ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1
-        }
-        j += 1
-      }
-      out(k) = acc
-      k += 1
-    }
-    out
-  }
-
-  private def ngramsChars(str: String, n: Int): Array[Long] = {
-    val len = str.length
-    var words = 1
-    var i = 0
-    while (i < len) { if (str.charAt(i) == ' ') words += 1; i += 1 }
-    if (words < n) return Array.emptyLongArray
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < len) {
-      if (str.charAt(i) == ' ') { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = len
-    val out = new Array[Long](words - n + 1)
-    var k = 0
-    while (k < out.length) {
-      var acc = 0L
-      var pos = 1L
-      var j = k
-      while (j < k + n) {
-        var c = starts(j)
-        val e = ends(j)
-        while (c < e) {
-          acc = (acc + str.charAt(c).toLong *
-            ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1; c += 1
-        }
-        if (j < k + n - 1) {
-          acc = (acc + 32L * ((1103515245L * pos + 12345L) % M)) % M
-          pos += 1
-        }
-        j += 1
-      }
-      out(k) = acc
-      k += 1
-    }
-    out
-  }
+  def ngrams(s: UTF8String, n: Int): ArrayData =
+    new GenericArrayData(new PortableText(s).ngramHashes(n))
 }
 
 object PortableNgramHash {

@@ -23,10 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * so the corpus-wide shuffles carry only fingerprints.
   *
   * Bit-parity: gram hash = (strHash(gram) · 2654435761) mod 1000003 with
-  * strHash the [[PortableHashExpr]] positional LCG — positions restart at
-  * 1 per gram, so the weights are the 5 fixed constants precomputed below.
-  * ASCII fast path on bytes; non-ASCII falls back to Java chars, matching
-  * PortableHashExpr's contract (`ascii`/`ord` semantics). */
+  * strHash the [[PortableText.windowHashes]] of the 5-code-unit spans
+  * (positions restart at 1 per gram). */
 final case class WinnowExpr(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -49,44 +47,16 @@ final case class WinnowExpr(child: Expression) extends UnaryExpression {
 }
 
 object WinnowExpr {
-  private final val M = 2147483647L
   private final val Mult = 2654435761L
   private final val Mod = 1000003L
-  // strHash positional weights for positions 1..5 (gram-local positions)
-  private final val W: Array[Long] =
-    Array.tabulate(5)(p => (1103515245L * (p + 1) + 12345L) % M)
 
   /** The shared kernel (also called from generated code). */
   def fingerprints(s: UTF8String): ArrayData = {
-    val nb = s.numBytes
-    var ascii = true
-    var i = 0
-    while (ascii && i < nb) { if (s.getByte(i) < 0) ascii = false; i += 1 }
-    val codes: Array[Long] =
-      if (ascii) {
-        val a = new Array[Long](nb)
-        var j = 0
-        while (j < nb) { a(j) = s.getByte(j) & 0xffL; j += 1 }
-        a
-      } else {
-        val str = s.toString
-        val a = new Array[Long](str.length)
-        var j = 0
-        while (j < str.length) { a(j) = str.charAt(j).toLong; j += 1 }
-        a
-      }
-    val len = codes.length
-    if (len < 8) return new GenericArrayData(Array.emptyLongArray)
-    val nGrams = len - 4
-    val hg = new Array[Long](nGrams)
+    val hg = new PortableText(s).windowHashes(5)
+    val nGrams = hg.length
+    if (nGrams < 4) return new GenericArrayData(Array.emptyLongArray)
     var g = 0
-    while (g < nGrams) {
-      var acc = 0L
-      var p = 0
-      while (p < 5) { acc = (acc + codes(g + p) * W(p)) % M; p += 1 }
-      hg(g) = (acc * Mult) % Mod
-      g += 1
-    }
+    while (g < nGrams) { hg(g) = (hg(g) * Mult) % Mod; g += 1 }
     // sliding 4-window min + dedup (fingerprint domain is [0, Mod))
     val seen = new java.util.HashSet[Long]()
     val out = new scala.collection.mutable.ArrayBuffer[Long]()

@@ -23,7 +23,7 @@ object Parity {
   }
 
   /** Modulus of [[strHash]] — the Mersenne prime 2^31-1. */
-  val HashM = 2147483647L
+  val HashM: Long = graft.functions.PortableText.M
 
   /** Portable token hash: positional-LCG-weighted codepoint sum mod 2^31-1.
     * Pure map-side compute — replaces the round-1 `dense_rank` dictionary
@@ -35,10 +35,13 @@ object Parity {
     * and `ord` (DuckDB) agree. Collisions (~n²/2³¹) hit BOTH engines
     * identically, so parity is unaffected.
     *
-    * Evaluated by the native O(len) codegen kernel
-    * [[graft.functions.PortableHashExpr]] — the Column `aggregate`/`substr`
-    * formulation it replaces re-scanned the string per character (O(len²)),
-    * and this hash sits under every shingle of q33/q34/q40. */
+    * The format (code units, positional weight, word segmentation) has one
+    * home, [[graft.functions.PortableText]], which every native kernel whose
+    * hash values surface reads text through. Evaluated by the native O(len)
+    * codegen kernel [[graft.functions.PortableHashExpr]] — the Column
+    * `aggregate`/`substr` formulation it replaces re-scanned the string per
+    * character (O(len²)), and this hash sits under every shingle of
+    * q33/q34/q40. */
   def strHash(c: Column): Column = graft.functions.PortableHash.hash(c)
 
   /** DuckDB rendering of [[strHash]] for oracle SQL; `e` must be a simple

@@ -57,7 +57,7 @@ object SelectionOps {
     // row-local function of the text, so the former explode + pmod +
     // groupBy(doc_id, …, b) — one row per bigram INSTANCE and a corpus
     // exchange — comes out of the scan already aggregated. Bit-identical
-    // (the kernel delegates the hash pass to PortableNgramHashExpr and
+    // (the kernel takes its hashes from PortableText.ngramHashes and
     // the hash is nonnegative, so % == pmod; KernelParitySpec pins it);
     // empty-array docs (<2 words) drop at the explode exactly as before.
     val nf = Tables.documents(s, d)
@@ -72,8 +72,8 @@ object SelectionOps {
     // nf stays UNPINNED — re-adjudicated r19 (VERDICT r18 #8) with the
     // r18 n-gram kernel in place: the r11 A/B read pin 1.25 s vs
     // recompute 1.06 s warm; with the kernel the two forms TIE at both
-    // granularities (Scratch8 warm rounds within ~5 %; fresh-child 3-run
-    // subset benches: unpinned q143 0.74 / q150 2.21 vs pinned 0.85 /
+    // granularities (OPTIMIZATION_r19.md §6: warm rounds within ~5 %;
+    // fresh-child 3-run subset benches: unpinned q143 0.74 / q150 2.21 vs pinned 0.85 /
     // 2.04 — mixed signs, inside the window band). On a tie the
     // recompute form wins on simplicity: no localCheckpoint blocks, no
     // lineage truncation, and the kernel explode is pure codegen'd
@@ -810,10 +810,7 @@ object SelectionOps {
     }.reduce(_.join(_, Seq("vec_id")))
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
     // database-side routing: argmax_j score_j, ties to the smaller j
-    val cellCol = -greatest((0 until 8).map(j =>
-      struct(SimilarityOps.ivfCellScore(col("v"), j).as("score"),
-        lit(-j).as("nj"))): _*).getField("nj")
-    val cells = e.select(col("vec_id"), cellCol.as("cell"))
+    val cells = e.select(col("vec_id"), SimilarityOps.ivfCell(col("v")).as("cell"))
     // query-side multiprobe: top-2 cells per query
     val probes = e.filter(col("vec_id") < 10)
       .withColumn("sc", explode(array((0 until 8).map(j =>

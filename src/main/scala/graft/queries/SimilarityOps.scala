@@ -113,21 +113,8 @@ object SimilarityOps {
     * equi-join on cell id — the corpus is never cross-joined. */
   def q52(s: SparkSession, d: String): DataFrame = {
     val fdot = graft.functions.VectorDot.dot _
-    def lcg(n: Int): Double =
-      ((1103515245L * n + 12345L) % 2147483648L) / 2147483648.0 - 0.5
-    def centroid(j: Int): Column =
-      array((0 until 64).map(i => lit(lcg(100000 + j * 64 + i))): _*)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    // argmax cell via greatest() over (score, -j) structs — a pure map-side
-    // expression (struct compare is lexicographic: best score, then
-    // smallest j), instead of explode ×8 + a corpus-wide window sort
-    val best = greatest((0 until 8).map { j =>
-      val cNorm2 = (0 until 64).map(i => { val x = lcg(100000 + j * 64 + i); x * x }).sum
-      struct((dot(col("v"), centroid(j)) - lit(cNorm2 / 2.0)).as("score"),
-        lit(-j).as("nj"))
-    }: _*)
-    val cells = e.withColumn("b", best)
-      .select(col("vec_id"), col("v"), (-col("b.nj")).as("cell"))
+    val cells = e.select(col("vec_id"), col("v"), ivfCell(col("v")).as("cell"))
       // both join sides read the routed vectors; frame-scoped pin (r11)
       .transform(graft.FramePin.pin)
     val withNorm = cells.withColumn("n2", fdot(col("v"), col("v")))
@@ -181,19 +168,10 @@ object SimilarityOps {
     * nothing quadratic. */
   def q76(s: SparkSession, d: String): DataFrame = {
     val fdot = graft.functions.VectorDot.dot _
-    def lcg(n: Int): Double =
-      ((1103515245L * n + 12345L) % 2147483648L) / 2147483648.0 - 0.5
-    def centroid(j: Int): Column =
-      array((0 until 64).map(i => lit(lcg(100000 + j * 64 + i))): _*)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    def cellScore(j: Int): Column = {
-      val cNorm2 = (0 until 64).map(i => { val x = lcg(100000 + j * 64 + i); x * x }).sum
-      dot(col("v"), centroid(j)) - lit(cNorm2 / 2.0)
-    }
-    // corpus side: map-side argmax via greatest() — no explode, no window
-    val cells = e.withColumn("b", greatest((0 until 8).map(j =>
-        struct(cellScore(j).as("score"), lit(-j).as("nj"))): _*))
-      .select(col("vec_id"), col("v"), (-col("b.nj")).as("cell"))
+    def cellScore(j: Int): Column = ivfCellScore(col("v"), j)
+    // corpus side: map-side argmax — no explode, no window
+    val cells = e.select(col("vec_id"), col("v"), ivfCell(col("v")).as("cell"))
       .withColumn("n2", fdot(col("v"), col("v")))
     // query side is tiny: explode the 8 scores + window for the top-2 cells
     val probes = e.filter(col("vec_id") < 10)
@@ -285,19 +263,10 @@ object SimilarityOps {
     * only window runs over (cells × labels) rows — a bounded dimension,
     * never the corpus. */
   def q114(s: SparkSession, d: String): DataFrame = {
-    def lcg(n: Int): Double =
-      ((1103515245L * n + 12345L) % 2147483648L) / 2147483648.0 - 0.5
-    def centroid(j: Int): Column =
-      array((0 until 64).map(i => lit(lcg(100000 + j * 64 + i))): _*)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").as("v"), col("label"))
-    val best = greatest((0 until 8).map { j =>
-      val cNorm2 = (0 until 64).map(i => { val x = lcg(100000 + j * 64 + i); x * x }).sum
-      struct((dot(col("v"), centroid(j)) - lit(cNorm2 / 2.0)).as("score"),
-        lit(-j).as("nj"))
-    }: _*)
-    val cl = e.withColumn("b", best)
-      .select((-col("b.nj")).cast("long").as("cell"), col("label").cast("long").as("label"))
+    val cl = e.select(ivfCell(col("v")).cast("long").as("cell"),
+        col("label").cast("long").as("label"))
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("c"))
     val n = cl.groupBy(col("cell")).agg(sum(col("c")).as("n"))
     cl.withColumn("rn", row_number().over(
@@ -413,9 +382,7 @@ object SimilarityOps {
     * expression over an `array<float>` embedding column — deterministic
     * LCG-seeded planes, identical in the DuckDB oracles. */
   private[queries] def planeBucket(v: Column): Column = {
-    def plane(j: Int): Column = array((0 until 64).map { i =>
-      lit(((1103515245L * (j * 64 + i) + 12345L) % 2147483648L) / 2147483648.0 - 0.5)
-    }: _*)
+    def plane(j: Int): Column = array((0 until 64).map(i => lit(ivfLcg(j * 64 + i))): _*)
     (0 until 8).map { j =>
       when(dot(v, plane(j)) > 0,
         lit(1L << j)).otherwise(lit(0L))
@@ -495,13 +462,19 @@ object SimilarityOps {
     dot(v, ivfCentroid(j)) - lit(cNorm2 / 2.0)
   }
 
+  /** The routed cell of `v`: argmax_j [[ivfCellScore]], ties to the
+    * smaller j. greatest() over (score, −j) structs is a pure map-side
+    * expression (struct compare is lexicographic: best score, then
+    * smallest j), instead of explode ×8 + a corpus-wide window sort. */
+  private[queries] def ivfCell(v: Column): Column =
+    -greatest((0 until 8).map(j =>
+      struct(ivfCellScore(v, j).as("score"), lit(-j).as("nj"))): _*).getField("nj")
+
   def q90(s: SparkSession, d: String): DataFrame = {
     val fdot = graft.functions.VectorDot.dot _
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
     def cellScore(j: Int): Column = ivfCellScore(col("v"), j)
-    val cells = e.withColumn("b", greatest((0 until 8).map(j =>
-        struct(cellScore(j).as("score"), lit(-j).as("nj"))): _*))
-      .select(col("vec_id"), col("v"), (-col("b.nj")).as("cell"))
+    val cells = e.select(col("vec_id"), col("v"), ivfCell(col("v")).as("cell"))
       .withColumn("n2", fdot(col("v"), col("v")))
       // query + corpus sides both read the routed vectors; frame-scoped pin
       .transform(graft.FramePin.pin)

@@ -39,7 +39,6 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("no gate in the registry leaves a cached (non-localCheckpoint) " +
       "RDD behind after its frame is executed") {
     val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- Queries.all.toSeq.sortBy(_._1)) {
       // pre-gate baseline AFTER the previous gate's cleanup nudge, so a

@@ -39,9 +39,14 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       "x y z w v u t", "abcdefgh", "same same same same")
   }
 
+  // non-ASCII documents (accented Latin mixed with ASCII, CJK) take the
+  // portable walker's char path instead of its byte path
+  private val nonAscii = Seq("héllo wörld mixed ascii", "日本語テキスト文章です",
+    "naïve café")
+
   test("winnow kernel is bit-identical to the declarative formulation") {
     val s = spark; import s.implicits._
-    val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val docs = (corpus ++ nonAscii).zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     // declarative reference: gram strHash, 4-window min, distinct
     val grams = docs.filter(length(col("text")) >= 8)
@@ -102,7 +107,7 @@ class KernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("chargram kernel matches the portable strHash of substr trigrams") {
     val s = spark; import s.implicits._
-    val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val docs = (corpus ++ nonAscii).zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val kernel = docs.filter(length(col("text")) >= 3)
       .select(col("doc_id"),
